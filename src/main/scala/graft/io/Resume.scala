@@ -3,7 +3,9 @@ package graft.io
 import graft.core.Triple
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.CollectionAccumulator
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Resumable partitioned materialization with per-partition lineage +
@@ -67,25 +69,33 @@ object Resume {
     }
   }
 
-  /** Write all not-yet-committed repos of `triples` into `table` in ONE
-    * dynamic-partition-overwrite job (plus one small aggregation pass for
-    * the per-partition counters). Returns the commits performed, sorted
-    * by repo (empty = nothing left to do).
+  /** Write all not-yet-committed repos of `triples` into `table` and
+    * return the commits performed, sorted by repo (empty = nothing left
+    * to do).
     *
-    * Two Spark jobs total, independent of repo count — the round-1 shape
-    * (a driver loop re-filtering the full dataset per repo) was 3×|repos|
-    * jobs and each filter was a typed lambda Catalyst couldn't prune.
-    * The committed set is excluded with a broadcast anti-join (the set is
-    * bounded by repo count, not corpus size); the remainder is shuffled
-    * once on `repo` so each task writes exactly one partition directory.
+    * One Spark write query per call, independent of repo count: the
+    * committed set is excluded with a broadcast anti-join (the set is
+    * bounded by repo count, not corpus size), the remainder is shuffled
+    * once on `repo`, and a dynamic-partition-overwrite write lands it.
+    * The manifest figures are counted inside that write's tasks: after
+    * the hash shuffle all of a repo's rows sit in one task, which counts
+    * its repos' rows and distinct non-null `drugSubj` (a set bounded by
+    * the drug vocabulary, not the input) and reports them through a
+    * per-call accumulator when its input is exhausted. Spark applies a
+    * result task's accumulator update once per finished partition and
+    * drops a failed attempt's, so the input is evaluated once and no
+    * separate counting query runs.
     *
-    * Crash contract (unchanged): a manifest entry is written atomically
-    * AFTER the data job completes, so a crash mid-write leaves only
-    * orphan data files in uncommitted partitions, which the next run's
-    * dynamic overwrite replaces — never a half-committed manifest.
-    * Commit granularity is per-run rather than round-1's per-repo: at
-    * 10^5 repos an interrupted run re-does at most one run's worth of
-    * partitions; callers wanting finer units chunk the input upstream.
+    * A null `repo` fails the call with an IllegalArgumentException from
+    * inside the task, before that task writes a row; the aborted job
+    * leaves neither a partition directory nor a manifest.
+    *
+    * Crash contract: a manifest entry is written atomically AFTER the
+    * data job completes, so a crash mid-write leaves only orphan data
+    * files in uncommitted partitions, which the next run's dynamic
+    * overwrite replaces — never a half-committed manifest. Commit
+    * granularity is per call; callers wanting finer units chunk the
+    * input upstream.
     */
   def writeResumable(
       spark: SparkSession,
@@ -95,18 +105,12 @@ object Resume {
     import spark.implicits._
     val done = committedRepos(table)
     val doneDf = spark.createDataset(done.toSeq).toDF("repo")
+    val counters = spark.sparkContext.collectionAccumulator[(String, Long, Long)]
     val remaining = triples.toDF()
       .join(broadcast(doneDf), Seq("repo"), "left_anti")
-
-    // per-partition counters in one aggregation pass (small result:
-    // one row per new repo)
-    val counters = remaining
-      .groupBy(col("repo"))
-      .agg(count(lit(1)).as("rows"), count_distinct(col("drugSubj")).as("subj"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    if (counters.isEmpty) return Seq.empty
+      .repartition(col("repo"))
+      .as[Triple]
+      .mapPartitions(rows => counted(rows, counters))
 
     // dynamic partition overwrite as a PER-WRITE option, never session
     // conf: inside foreachBatch the frame is bound to a cloned
@@ -115,16 +119,28 @@ object Resume {
     // to full-table overwrite there, wiping earlier repos' partitions
     // (caught by the StreamOpsSpec kg-stream e2e). The write option
     // takes precedence over session conf in all contexts.
-    remaining
-      .repartition(col("repo"))
-      .write
-      .mode(SaveMode.Overwrite) // dynamic: replaces only written repos
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("repo")
-      .parquet(table)
+    try
+      remaining.write
+        .mode(SaveMode.Overwrite) // dynamic: replaces only written repos
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("repo")
+        .parquet(table)
+    catch { // Spark wraps a task's exception in job- and write-abort errors
+      case e: Exception =>
+        throw Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .collectFirst { case n: IllegalArgumentException if n.getMessage == NullRepo => n }
+          .getOrElse(e)
+    }
+
+    val reports = counters.value.asScala.toSeq.sortBy(_._1)
+    val repos = reports.map(_._1)
+    if (repos.distinct.size != repos.size)
+      throw new IllegalStateException("repos counted by more than one write task (distinct counts " +
+        s"cannot be merged): ${repos.diff(repos.distinct).distinct.map(jsonStr).mkString(", ")}")
+    if (reports.isEmpty) return Seq.empty
 
     Files.createDirectories(manifestDir(table))
-    counters.toSeq.map { case (repo, rows, distinctSubj) =>
+    reports.map { case (repo, rows, distinctSubj) =>
       val commit = Commit(repo, rows, distinctSubj, java.time.Instant.now().toString)
       val json =
         s"""{"repo":${jsonStr(commit.repo)},"rows":${commit.rows},"distinct_subj":${commit.distinctSubj},"ts":${jsonStr(commit.ts)}}"""
@@ -133,6 +149,37 @@ object Resume {
       Files.move(tmp, manifestDir(table).resolve(s"${enc(repo)}.json"),
         StandardCopyOption.ATOMIC_MOVE)
       commit
+    }
+  }
+
+  private val NullRepo = "column `repo` must not be null: a triple without a repo has no partition to commit"
+
+  /** Pass `rows` through unchanged, counting rows and distinct non-null
+    * `drugSubj` per repo; the counts go to `counters` once the input is
+    * exhausted.
+    */
+  private def counted(
+      rows: Iterator[Triple],
+      counters: CollectionAccumulator[(String, Long, Long)]
+  ): Iterator[Triple] = new Iterator[Triple] {
+    private val rowsOf = mutable.HashMap.empty[String, Long]
+    private val subjOf = mutable.HashMap.empty[String, mutable.HashSet[String]]
+    private var reported = false
+    def hasNext: Boolean = {
+      val more = rows.hasNext
+      if (!more && !reported) {
+        reported = true
+        rowsOf.foreach { case (repo, n) => counters.add((repo, n, subjOf(repo).size.toLong)) }
+      }
+      more
+    }
+    def next(): Triple = {
+      val t = rows.next()
+      if (t.repo == null) throw new IllegalArgumentException(NullRepo)
+      rowsOf(t.repo) = rowsOf.getOrElse(t.repo, 0L) + 1
+      val subj = subjOf.getOrElseUpdate(t.repo, mutable.HashSet.empty)
+      if (t.drugSubj != null) subj += t.drugSubj
+      t
     }
   }
 

@@ -85,29 +85,4 @@ object Triples {
   /** Unsalted direct aggregation (the correctness oracle for salting). */
   def plainCounts(triples: Dataset[Triple]): DataFrame =
     triples.toDF().groupBy(col("drugSubj")).agg(count(lit(1)).as("n"))
-
-  /** Write the KG partitioned by repo, with per-partition row counters
-    * observed on the way out (lineage/metrics requirement). Returns the
-    * observed metrics row.
-    */
-  def write(
-      spark: SparkSession,
-      triples: Dataset[Triple],
-      outPath: String
-  ): Map[String, Any] = {
-    import org.apache.spark.sql.Observation
-    val obs = Observation("triples_write")
-    triples
-      .observe(
-        obs,
-        count(lit(1)).as("rows"),
-        approx_count_distinct(col("drugSubj")).as("distinct_subj")
-      )
-      .repartition(col("repo"))
-      .write
-      .mode("overwrite")
-      .partitionBy("repo")
-      .parquet(outPath)
-    obs.get
-  }
 }

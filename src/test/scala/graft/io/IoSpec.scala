@@ -2,8 +2,10 @@ package graft.io
 
 import graft.TestSpark
 import graft.core.{FeatureRow, Mention, Triple}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class IoSpec extends AnyFunSuite {
 
@@ -63,8 +65,17 @@ class IoSpec extends AnyFunSuite {
     // resume with the full input: only repo-c is new work
     val c2 = Resume.writeResumable(spark, trips("repo-a", "repo-b", "repo-c"), table)
     assert(c2.map(_.repo) == Seq("repo-c"))
-    // a third resume does nothing
+    // a third resume does nothing: no commit, same snapshot, same manifests
+    val manifestDir = java.nio.file.Paths.get(table, "_graft_commits")
+    def manifests = {
+      val ls = Files.list(manifestDir)
+      try ls.iterator().asScala.map(p => p.getFileName.toString -> Files.readString(p)).toMap
+      finally ls.close()
+    }
+    val (readBefore, manifestsBefore) = (Resume.read(spark, table).collect().sortBy(_.sid).toSeq, manifests)
     assert(Resume.writeResumable(spark, trips("repo-a", "repo-b", "repo-c"), table).isEmpty)
+    assert(Resume.read(spark, table).collect().sortBy(_.sid).toSeq == readBefore)
+    assert(manifests == manifestsBefore)
     // the table reads back complete and correct
     val back = Resume.read(spark, table)
     assert(back.count() == 15)
@@ -122,6 +133,73 @@ class IoSpec extends AnyFunSuite {
     val c = Resume.writeResumable(spark, trips("repo-a", "repo-b"), table)
     assert(c.map(_.repo) == Seq("repo-b") && c.head.rows == 5)
     assert(Resume.read(spark, table).count() == 10)
+  }
+
+  private def tree(table: String): Seq[String] = {
+    val root = java.nio.file.Paths.get(table)
+    if (!Files.exists(root)) Seq.empty
+    else {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.map(p => root.relativize(p).toString).toSeq.sorted
+      finally walk.close()
+    }
+  }
+
+  test("resume: a null repo is rejected before any partition directory or manifest lands") {
+    import spark.implicits._
+    def trip(repo: String, i: Int) = Triple(s"d$i", "int", "o", s"s$i", "e1", "e2", repo)
+    val shapes = Seq(
+      "null repo only" -> (1 to 3).map(trip(null, _)),
+      "null repo plus repo-a" -> ((1 to 3).map(trip(null, _)) ++ (1 to 4).map(trip("repo-a", _))))
+    shapes.foreach { case (shape, rows) =>
+      val table = Files.createTempDirectory("kg").toString + "/triples"
+      val e = intercept[IllegalArgumentException](
+        Resume.writeResumable(spark, spark.createDataset(rows), table))
+      assert(e.getMessage.contains("`repo`"), s"$shape: ${e.getMessage}")
+      assert(Resume.committedRepos(table).isEmpty, shape)
+      assert(!Files.exists(java.nio.file.Paths.get(table, "_graft_commits")), s"$shape: manifest dir written")
+      assert(!tree(table).exists(_.contains("__HIVE_DEFAULT_PARTITION__")), s"$shape: ${tree(table)}")
+      assert(!tree(table).exists(_.startsWith("repo=")), s"$shape: ${tree(table)}")
+      // without the null rows the same table commits normally
+      val c = Resume.writeResumable(spark, spark.createDataset(rows.filter(_.repo != null)), table)
+      assert(c.map(r => (r.repo, r.rows)) == rows.filter(_.repo != null).groupBy(_.repo)
+        .map { case (r, ts) => (r, ts.size.toLong) }.toSeq, shape)
+    }
+  }
+
+  test("resume: one call evaluates each input row once") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("kg").toString + "/triples"
+    val rows = Seq("repo-a", "repo-b", "repo-c").flatMap(r =>
+      (1 to 7).map(i => Triple(s"drug$i", "int", "obj", s"$r.s$i", "e1", "e2", r)))
+    val evals = spark.sparkContext.longAccumulator("evals")
+    val in = spark.createDataset(rows).map { t => evals.add(1); t }
+    val c = Resume.writeResumable(spark, in, table)
+    assert(c.map(_.rows).sum == rows.size)
+    assert(evals.sum == rows.size, s"${evals.sum} evaluations of ${rows.size} rows")
+  }
+
+  test("resume: commit rows and distinctSubj equal a groupBy oracle, in the result and the manifests") {
+    import spark.implicits._
+    val table = Files.createTempDirectory("kg").toString + "/triples"
+    val rnd = new scala.util.Random(7)
+    val subjects = Seq(null, "warfarin", "aspirin", "Aspirin", "heparin", "ibuprofen")
+    val rows = (0 until 600).map { i =>
+      val repo = s"repo-${rnd.nextInt(11)}"
+      Triple(subjects(rnd.nextInt(subjects.size)), "int", "obj", s"$repo.s$i", "e1", "e2", repo)
+    }
+    val in = spark.sparkContext.parallelize(rows, 9).toDS()
+    assert(in.rdd.getNumPartitions >= 8)
+    val oracle = in.groupBy("repo")
+      .agg(count(lit(1)), count_distinct(col("drugSubj")))
+      .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
+    val c = Resume.writeResumable(spark, in, table)
+    assert(c.map(x => (x.repo, x.rows, x.distinctSubj)) == oracle)
+    assert(rows.exists(_.drugSubj == null) && oracle.forall { case (_, n, d) => d < n })
+    val manifests = spark.read
+      .json(java.nio.file.Paths.get(table, "_graft_commits").toString + "/*.json")
+      .select("repo", "rows", "distinct_subj").as[(String, Long, Long)].collect().sortBy(_._1).toSeq
+    assert(manifests == oracle)
   }
 
   test("codemaps: sorted deterministic ids, PAD=0/UNK=1, idx round-trip") {

@@ -16,7 +16,10 @@ BASE=$(mktemp -d /tmp/kgstream.XXXX)
 SRC="$BASE/src"; TABLE="$BASE/triples"; CKPT="$BASE/ckpt"; EXP="$BASE/expected.json"
 
 start_cluster_master
-start_workers 4 2 4g
+# up to 4 workers of 2 pinned cores each, as many as the host has cores for
+WORKERS=$(( $(nproc) / 2 )); [ "$WORKERS" -gt 4 ] && WORKERS=4; [ "$WORKERS" -lt 1 ] && WORKERS=1
+CORES=$((WORKERS * 2))
+start_workers "$WORKERS" 2 4g
 
 submit() { # class args... (runs in foreground, streams output)
   local cls="$1"; shift
@@ -43,7 +46,7 @@ setsid bash -c '
     --driver-memory 3g --executor-memory 3g \
     --conf spark.ui.enabled=false \
     --conf spark.executor.extraJavaOptions=-XX:+UseParallelGC \
-    "'"$JAR"'" run "'"$SRC"'" "'"$TABLE"'" "'"$CKPT"'" 8
+    "'"$JAR"'" run "'"$SRC"'" "'"$TABLE"'" "'"$CKPT"'" "'"$CORES"'"
 ' > "$OUT1" 2>/dev/null &
 APP=$!
 KILLED_AT=""
@@ -68,7 +71,7 @@ grep '^BATCH' "$OUT1" | head -4 >&2
 
 echo "== phase 2: re-submit, resume from checkpoint + manifests ==" >&2
 OUT2="$BASE/phase2.out"
-submit graft.tools.StreamCluster run "$SRC" "$TABLE" "$CKPT" 8 > "$OUT2"
+submit graft.tools.StreamCluster run "$SRC" "$TABLE" "$CKPT" "$CORES" > "$OUT2"
 grep '^BATCH' "$OUT2" >&2 || true
 [ "$(grep -c '^BATCH' "$OUT2")" -ge 1 ] \
   || { echo "STREAM FAIL: phase 2 did no work - the crash cannot have been real" >&2; exit 1; }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Deduplication operators: exact, MinHash+LSH, n-gram Jaccard,
   * embedding-cosine near-dup. (SimHash lives in TextOps.)
@@ -580,27 +581,11 @@ object Dedup {
       k)
   }
 
-  /** Word k-gram shingles of `text` as a distinct array. */
-  def shingles(text: Column, k: Int = 3): Column = {
-    val toks = TextOps.tokens(text)
-    array_distinct(
-      filter(
-        transform(toks, (_, i) => when(i <= size(toks) - k, concat_ws(" ", slice(toks, i + 1, lit(k))))),
-        x => x.isNotNull
-      )
-    )
-  }
-
-  /** MinHash signatures: one row per (doc_id, band) with the band's
-    * min-hash over shingles. Hash = md5(shingle + "#" + band) kept as a
-    * string so the DuckDB oracle computes the identical value; the
-    * hot-path variant would swap in xxhash64 (codegen, 8 bytes) — same
-    * operator shape.
-    */
-  /** One (doc_id, shingle) row per distinct word k-gram, built in a
-    * typed flatMap — an order of magnitude faster than the equivalent
-    * higher-order-function expression (per-element `slice` allocates;
-    * measured 3.1s vs 0.3s on 5k docs).
+  /** One (doc_id, shingle) row per distinct word k-gram of `text` —
+    * the [[distinctShingles]] set of each doc as rows, in a typed
+    * flatMap (the higher-order-function form allocated per `slice`;
+    * measured 3.1s vs 0.3s on 5k docs). Row order within a doc is
+    * unspecified.
     */
   def shingleRows(docs: DataFrame, k: Int = 3): DataFrame = {
     val spark = docs.sparkSession
@@ -608,16 +593,33 @@ object Dedup {
     docs
       .select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
-      .flatMap { case (id, text) =>
-        val toks = text.split(" ", -1)
-        if (toks.length < k) Iterator.empty
-        else {
-          val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-          toks.sliding(k).foreach(w => seen += w.mkString(" "))
-          seen.iterator.map(s => (id, s))
-        }
-      }
+      .flatMap { case (id, text) => distinctShingles(text, k).asScala.iterator.map(s => (id, s)) }
       .toDF("doc_id", "shingle")
+  }
+
+  /** The distinct k-token windows of `text` (split on single spaces,
+    * window tokens joined by one space) — the one shingle rule behind
+    * [[shingleRows]], [[md5BandMins]], [[ngramJaccard]] and the stream
+    * twins' benchmark probes. Null text and texts shorter than `k`
+    * tokens have no shingles.
+    */
+  private[graft] def distinctShingles(text: String, k: Int): java.util.HashSet[String] = {
+    if (text == null) return new java.util.HashSet[String]()
+    val toks = text.split(" ", -1)
+    val seen = new java.util.HashSet[String](math.max(16, toks.length * 2))
+    var i = 0
+    while (i <= toks.length - k) {
+      val sb = new java.lang.StringBuilder
+      var j = i
+      while (j < i + k) {
+        if (j > i) sb.append(' ')
+        sb.append(toks(j))
+        j += 1
+      }
+      seen.add(sb.toString)
+      i += 1
+    }
+    seen
   }
 
   /** Typed md5 band-minimum pass: one row per doc carrying ALL `bands`
@@ -638,31 +640,9 @@ object Dedup {
     * window 0 = digest bytes 0..6 big-endian then the high nibble of
     * byte 7; window 1 = the low nibble of byte 7 then bytes 8..14.
     * Duplicate shingle occurrences cannot change a minimum, so the
-    * per-doc distinct set is hashed once (same dedup as shingleRows).
+    * per-doc distinct set is hashed once. A doc without shingles has
+    * no row.
     */
-  /** The distinct k-token space-joined windows of one tokenized doc —
-    * the shared typed shingle-set builder behind [[md5BandMins]] and
-    * [[ngramJaccard]] (the row-emitting sibling is [[shingleRows]];
-    * keep the window semantics in ONE place). Caller guards
-    * `toks.length >= k`.
-    */
-  private def distinctShingles(toks: Array[String], k: Int): java.util.HashSet[String] = {
-    val seen = new java.util.HashSet[String](math.max(16, toks.length * 2))
-    var i = 0
-    while (i <= toks.length - k) {
-      val sb = new java.lang.StringBuilder
-      var j = i
-      while (j < i + k) {
-        if (j > i) sb.append(' ')
-        sb.append(toks(j))
-        j += 1
-      }
-      seen.add(sb.toString)
-      i += 1
-    }
-    seen
-  }
-
   private def md5BandMins(docs: DataFrame, bands: Int, k: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -673,12 +653,11 @@ object Dedup {
         val md = java.security.MessageDigest.getInstance("MD5")
         val nDigests = (bands + 1) / 2
         rows.flatMap { case (id, text) =>
-          // null text == no shingles (shingleRows' convention): absent
-          val toks = if (text == null) null else text.split(" ", -1)
-          if (toks == null || toks.length < k) Iterator.empty
+          val sh = distinctShingles(text, k)
+          if (sh.isEmpty) Iterator.empty
           else {
             val mins = Array.fill(bands)(Long.MaxValue)
-            val it = distinctShingles(toks, k).iterator()
+            val it = sh.iterator()
             while (it.hasNext) {
               val sb = new java.lang.StringBuilder(it.next())
               val baseLen = sb.length
@@ -714,6 +693,12 @@ object Dedup {
         col("doc_id") +: (0 until bands).map(b => col("mins").getItem(b).as(s"sig$b")): _*)
   }
 
+  /** MinHash signatures: one row per (doc_id, band) with the band's
+    * min-hash over shingles. Hash = md5(shingle + "#" + band) kept as a
+    * string so the DuckDB oracle computes the identical value; the
+    * hot-path variant would swap in xxhash64 (codegen, 8 bytes) — same
+    * operator shape.
+    */
   def minhashSignatures(docs: DataFrame, bands: Int = 8, k: Int = 3): DataFrame =
     minhashWith(docs, bands, k, fast = false)
 
@@ -1238,10 +1223,9 @@ object Dedup {
     * Shape (round-8 rewrite, q17 33.2 s → typed at sf1): the former
     * per-pair `array_intersect`/`array_union` built a hash set per
     * evaluation AND the union subtree appeared twice (empty-union guard
-    * + divisor), on shingle arrays produced by the interpreted
-    * [[shingles]] HOF — re-evaluated once per join side. Now each doc's
-    * SORTED distinct shingle array is built once in a typed pass (same
-    * sliding-window + distinct semantics as [[shingleRows]]), and each
+    * + divisor), on shingle arrays produced by an interpreted HOF —
+    * re-evaluated once per join side. Now each doc's SORTED
+    * [[distinctShingles]] array is built once in a typed pass, and each
     * pair's |∩| comes from ONE linear merge over the two sorted arrays;
     * |∪| = |A| + |B| − |∩| (the arrays are sets). Only the counts
     * escape the typed region — the division and 4-decimal rounding stay
@@ -1259,15 +1243,10 @@ object Dedup {
       .select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .map { case (id, text) =>
-        // null text == no shingles (empty set, like a sub-k doc)
-        val toks = if (text == null) null else text.split(" ", -1)
-        if (toks == null || toks.length < k) (id, Array.empty[String])
-        else {
-          val seen = distinctShingles(toks, k)
-          val arr = seen.toArray(new Array[String](seen.size))
-          java.util.Arrays.sort(arr.asInstanceOf[Array[AnyRef]])
-          (id, arr)
-        }
+        val seen = distinctShingles(text, k)
+        val arr = seen.toArray(new Array[String](seen.size))
+        java.util.Arrays.sort(arr.asInstanceOf[Array[AnyRef]])
+        (id, arr)
       }
       .toDF("doc_id", "sh")
       .localCheckpoint()

@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
   * token counting, quality scoring, language-ID heuristics, document
   * fingerprinting, simhash.
   *
-  * All operators are pure column expressions (whole-stage codegen'd, no
-  * UDFs), so they pipeline inside the scan stage and scale linearly —
-  * no shuffles anywhere in this file except where groupBy is inherent.
+  * Operators are column expressions or typed row-local passes, so they
+  * pipeline inside the scan stage and scale linearly — no shuffles
+  * anywhere in this file except where groupBy or a join is inherent.
   * Every operator has a DuckDB-expressible twin used as the driver-side
   * oracle (SparkEntry.oracleSql).
   */
@@ -118,103 +118,77 @@ object TextOps {
     * oracle-table variant (q13), 60 the production fingerprint the
     * near-dup join uses.
     *
-    * Shape (round 8): one typed row-local pass — a document's tokens
-    * all live in its own text, so the vote tally never needed the
-    * explode + 60-vote-column groupBy it previously ran (one combined
-    * row per doc still shuffled, and every exploded token paid `bits`
-    * when()-column updates plus the md5+conv string chain). The typed
-    * loop digests each token occurrence once, takes the first
-    * ceil(bits/4) nibbles straight from the digest bytes (no hex
-    * string), and tallies votes in a primitive array — ZERO Exchange,
-    * same fingerprint bit-for-bit (the [[simhashExpr]] equality spec
-    * now cross-checks typed vs the independent Column HOF form;
-    * q13/q27 oracles unchanged).
+    * Shape (round 8): one typed row-local pass over [[simhashOf]] — a
+    * document's tokens all live in its own text, so the vote tally
+    * never needed the explode + 60-vote-column groupBy it previously
+    * ran. ZERO Exchange; one MessageDigest per partition. A doc with
+    * null text has no row (the groupBy form's explode(split(null))
+    * emitted none).
     */
   def simhash(docs: DataFrame, bits: Int = 16): DataFrame = {
     require(bits >= 1 && bits <= 60, s"bits must be 1..60, got $bits")
     val spark = docs.sparkSession
     import spark.implicits._
-    val nNib = (bits + 3) / 4
     docs
       .select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .mapPartitions { rows =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        rows.flatMap { case (id, text) =>
-          // null text: the Column form's explode(split(null)) emitted no
-          // row, so the doc was absent — keep that contract
-          if (text == null) Iterator.empty
-          else Iterator.single {
-          val toks = text.split(" ", -1)
-          val votes = new Array[Int](bits)
-          var i = 0
-          while (i < toks.length) {
-            md.reset()
-            val d = md.digest(toks(i).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            // first nNib nibbles of the digest, big-endian — exactly
-            // conv(substring(hex, 1, nNib), 16, 10)
-            var h = 0L
-            var x = 0
-            while (x < nNib) {
-              h = (h << 4) | ((d(x >> 1) >> (4 * (1 - (x & 1)))) & 0xf)
-              x += 1
-            }
-            var j = 0
-            while (j < bits) {
-              if (((h >>> j) & 1L) == 1L) votes(j) += 1 else votes(j) -= 1
-              j += 1
-            }
-            i += 1
-          }
-          var sig = 0L
-          var j = 0
-          while (j < bits) {
-            if (votes(j) > 0) sig |= (1L << j)
-            j += 1
-          }
-          (id, sig)
-          }
-        }
+        rows.collect { case (id, text) if text != null => (id, simhashOf(md, text, bits)) }
       }
       .toDF("doc_id", "simhash")
   }
 
-  /** Row-local simhash: the same fingerprint as [[simhash]] (spec-gated
-    * bit-identical) computed entirely inside the row with higher-order
-    * functions — one md5 per token, votes accumulated in an array
-    * accumulator, no explode and NO SHUFFLE. This is the 100 TB form
-    * (the groupBy variant shuffles one row per document even after
-    * map-side combine; this one pipelines inside the scan stage) and the
-    * streaming-compatible form (no aggregation state).
-    *
-    * Bit arithmetic is shift-free so it stays in the Column API: bit j
-    * of the token hash is tested with `h & (1L << j)` against a literal
-    * powers array, and the final fingerprint is the sum of the powers
-    * whose vote is positive.
-    *
-    * Role since round 8: [[simhash]] itself is now a typed row-local
-    * pass (faster than both this HOF form and the old groupBy form —
-    * SimhashTiming), so this expression exists for contexts that need
-    * a pure COLUMN expression rather than a typed Dataset op —
-    * streaming composition (StreamOps.nearDupStream's
-    * dropDuplicatesWithinWatermark) and scan-stage enrichment — and as
-    * the independent arm of the bit-identity spec.
+  /** The [[simhash]] fingerprint of one non-null text as a column
+    * expression, for contexts that need a column rather than a typed
+    * Dataset op: streaming composition (StreamOps.nearDupStream's
+    * dropDuplicatesWithinWatermark) and scan-stage enrichment. A UDF
+    * over [[simhashOf]], so row-local with no shuffle and no
+    * aggregation state; null text gives null.
     */
   def simhashExpr(text: Column, bits: Int = 16): Column = {
     require(bits >= 1 && bits <= 60, s"bits must be 1..60, got $bits")
-    val powers = typedLit((0 until bits).map(j => 1L << j))
-    val hs = transform(
-      tokens(text),
-      t => conv(substring(md5(to_binary(t, lit("utf-8"))), 1, (bits + 3) / 4), 16, 10).cast("long"))
-    val votes = aggregate(
-      hs,
-      array_repeat(lit(0), bits),
-      (acc, h) => zip_with(acc, powers, (a, p) =>
-        a + when(h.bitwiseAND(p) =!= 0, 1).otherwise(-1)))
-    aggregate(
-      zip_with(votes, powers, (v, p) => when(v > 0, p).otherwise(0L)),
-      lit(0L),
-      (acc, x) => acc + x)
+    val f = udf { (t: String) =>
+      if (t == null) null
+      else java.lang.Long.valueOf(simhashOf(java.security.MessageDigest.getInstance("MD5"), t, bits))
+    }
+    f(text)
+  }
+
+  /** The simhash vote loop for one text: each token occurrence is
+    * digested once, its first ceil(bits/4) nibbles are read straight
+    * from the digest bytes (exactly conv(substring(hex, 1, nNib), 16,
+    * 10), no hex string), and the votes are tallied in a primitive
+    * array.
+    */
+  private def simhashOf(md: java.security.MessageDigest, text: String, bits: Int): Long = {
+    val nNib = (bits + 3) / 4
+    val toks = text.split(" ", -1)
+    val votes = new Array[Int](bits)
+    var i = 0
+    while (i < toks.length) {
+      md.reset()
+      val d = md.digest(toks(i).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      var h = 0L
+      var x = 0
+      while (x < nNib) {
+        h = (h << 4) | ((d(x >> 1) >> (4 * (1 - (x & 1)))) & 0xf)
+        x += 1
+      }
+      var j = 0
+      while (j < bits) {
+        if (((h >>> j) & 1L) == 1L) votes(j) += 1 else votes(j) -= 1
+        j += 1
+      }
+      i += 1
+    }
+    var sig = 0L
+    var j = 0
+    while (j < bits) {
+      if (votes(j) > 0) sig |= (1L << j)
+      j += 1
+    }
+    sig
   }
 
   /** Rare-token profile per document: the corpus-frequency view of a
@@ -493,12 +467,18 @@ object TextOps {
     * top-bigram share > repNum/repDen) — a float threshold would make
     * the keep decision depend on engine rounding at the boundary.
     *
+    * A null `lang` does not fail the lang rule (SQL three-valued logic:
+    * `lang NOT IN (...)` is NULL, as in the q42 oracle); null text has
+    * `n_tokens` = -1 and no shingles, so it reads `too_short` unless
+    * the lang rule fires first.
+    *
     * Scale posture: lang/length/repetition are row-local signals inside
-    * the scan (the bigram mode count shares [[ngramRepetition]]'s typed
-    * pass with q39 — same HOF→typed rationale); contamination reuses
+    * the scan ([[policySignals]]; the bigram mode count shares
+    * [[ngramRepetition]]'s typed pass with q39); contamination reuses
     * [[decontaminate]]'s broadcast shingle semi join, so the only
     * shuffle is the distinct-contaminated-ids aggregation keyed on
-    * doc_id. The policy frame is one left join on that (small) id set.
+    * doc_id. The policy frame is one left join on that (small) id set,
+    * then [[policyReason]] per row.
     */
   def filterPolicy(
       docs: DataFrame,
@@ -512,45 +492,51 @@ object TextOps {
   ): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // row-local signal pass: token count + bigram mode count (mx = 0
-    // for sub-bigram docs, exactly the former when(nTok >= 2) guard)
-    val base = docs
-      .select(col("doc_id").cast("long"), col("lang"), col("text"))
-      .as[(Long, String, String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, lang, text) =>
-          // null text: the Column form read size(split(null)) = -1 and
-          // mx = 0 (the nTok >= 2 guard) — keep those exact values so
-          // the first-failing-reason precedence is unchanged
-          if (text == null) (id, lang, -1, 0L)
-          else {
-            val toks = text.split(" ", -1)
-            val mx =
-              if (toks.length >= 2) ngramRepetition(toks, withTrigrams = false)._1 else 0L
-            (id, lang, toks.length, mx)
-          }
-        }
-      }
-      .toDF("doc_id", "lang", "n_tokens", "mx")
+    val allowed = allowedLangs.toSet
     val benchShingles = Dedup.shingleRows(benchmark, k).select(col("shingle")).distinct()
     val contaminated = Dedup.shingleRows(docs, k)
       .join(broadcast(benchShingles), Seq("shingle"))
       .select(col("doc_id")).distinct()
-      .withColumn("cont", lit(1))
-    val reason =
-      when(!col("lang").isin(allowedLangs: _*), "lang")
-        .when(col("n_tokens") < minTokens, "too_short")
-        .when(col("n_tokens") > maxTokens, "too_long")
-        .when(col("mx") * repDen > (col("n_tokens") - 1).cast("long") * repNum, "repetitive")
-        .when(coalesce(col("cont"), lit(0)) === 1, "contaminated")
-        .otherwise("kept")
-    base
+      .withColumn("cont", lit(true))
+    docs
+      .select(col("doc_id").cast("long"), col("lang"), col("text"))
       .join(contaminated, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"), col("lang"), col("n_tokens"),
-        reason.as("reason"),
-        when(reason === "kept", 1).otherwise(0).as("keep"))
+      .select(col("doc_id"), col("lang"), col("text"), col("cont").isNotNull)
+      .as[(Long, String, String, Boolean)]
+      .map { case (id, lang, text, cont) =>
+        val (n, mx) = policySignals(text)
+        val reason = policyReason(lang, n, mx, cont, allowed, minTokens, maxTokens, repNum, repDen)
+        (id, lang, n, reason, if (reason == "kept") 1 else 0)
+      }
+      .toDF("doc_id", "lang", "n_tokens", "reason", "keep")
   }
+
+  /** The row-local [[filterPolicy]] signals of one text: (token count,
+    * bigram mode count). Null text gives (-1, 0) and a sub-bigram text
+    * a mode of 0.
+    */
+  private[graft] def policySignals(text: String): (Int, Long) =
+    if (text == null) (-1, 0L)
+    else {
+      val toks = text.split(" ", -1)
+      val mx = if (toks.length >= 2) ngramRepetition(toks, withTrigrams = false)._1 else 0L
+      (toks.length, mx)
+    }
+
+  /** The first failing [[filterPolicy]] rule, or `kept`. `contaminated`
+    * is by-name so a probe runs only for docs that pass every other
+    * rule.
+    */
+  private[graft] def policyReason(
+      lang: String, nTokens: Int, mx: Long, contaminated: => Boolean,
+      allowedLangs: Set[String], minTokens: Int, maxTokens: Int,
+      repNum: Int, repDen: Int): String =
+    if (lang != null && !allowedLangs.contains(lang)) "lang"
+    else if (nTokens < minTokens) "too_short"
+    else if (nTokens > maxTokens) "too_long"
+    else if (mx * repDen > (nTokens - 1).toLong * repNum) "repetitive"
+    else if (contaminated) "contaminated"
+    else "kept"
 
   /** PII patterns shared with the DuckDB oracle — restricted to the
     * dialect subset where Java regex (Spark) and RE2 (DuckDB) agree:

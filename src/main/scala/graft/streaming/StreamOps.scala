@@ -4,20 +4,35 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 /** Structured Streaming operators.
   *
   * The reference is batch-only (SURVEY §2.7), but a production ingest of
   * a 10^12-file corpus arrives as a stream; these are the streaming
-  * twins of the batch operators:
-  *   - `windowedCounts`: event-time tumbling window + watermark (late
-  *     data dropped after `late`), the streaming A1;
-  *   - `sessionizeStream`: gap-based sessions via
-  *     `flatMapGroupsWithState` with event-time timeout — the streaming
-  *     twin of ops.Events.sessionize, emitting a session row once its
-  *     gap elapses.
+  * twins of the batch operators.
   *
-  * Both run on any streaming source (`readStream`); specs drive them
+  * Stateless (no state store; row-local or broadcast-joined):
+  *   - `scoreStream`: the fused KG scoring pass;
+  *   - `enrichStream`: broadcast join against a static dimension;
+  *   - `benchmarkShingles` (collects and broadcasts the benchmark set; not
+  *     a stream op),
+  *     `decontaminateStream` and `filterPolicyStream`: the batch ops'
+  *     own row-local rules with a broadcast benchmark probe.
+  *
+  * Stateful:
+  *   - `windowedCounts`: event-time tumbling window + watermark;
+  *   - `dedupStream`, `nearDupStream`: watermark-bounded dedup on an id
+  *     or on the row-local `TextOps.simhashExpr`;
+  *   - `annDedupStream`, `ivfDedupStream`: bounded per-bucket/per-cell
+  *     rings of admitted vectors;
+  *   - `incrementalDedupStream`, `paragraphDedupStream`,
+  *     `dupSpansStream`: one boolean per distinct digest, optionally
+  *     preloaded from a stored digest table;
+  *   - `tokenBudgetMixStream`: one running counter per domain;
+  *   - `sessionizeStream`: gap-based sessions with event-time timeout.
+  *
+  * All run on any streaming source (`readStream`); specs drive them
   * with MemoryStream.
   */
 object StreamOps {
@@ -475,12 +490,13 @@ object StreamOps {
   /** Streaming twin of [[graft.ops.TextOps.decontaminate]]: flag
     * documents sharing any k-gram with a benchmark corpus as they
     * arrive. Entirely STATELESS — the benchmark shingle set is a
-    * broadcast snapshot and the check is row-local (each doc's
-    * shingles are probed against the broadcast hash set inside the
-    * map), so the operator needs no watermark, no state store, and no
-    * shuffle: it composes with any sink in append mode and scales with
-    * the stream alone. Output matches the batch op exactly
-    * (n_hit_shingles = distinct contaminated shingles; spec-gated).
+    * broadcast snapshot and each doc's distinct shingles (the batch
+    * op's own `Dedup.distinctShingles` rule) are probed against it
+    * inside the map, so the operator needs no watermark, no state
+    * store, and no shuffle: it composes with any sink in append mode
+    * and scales with the stream alone. Output matches the batch op
+    * exactly (n_hit_shingles = distinct contaminated shingles; null
+    * text reads (0, 0); spec-gated).
     */
   def decontaminateStream(
       spark: SparkSession,
@@ -491,28 +507,22 @@ object StreamOps {
     import spark.implicits._
     docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
       .map { case (id, text) =>
-        val toks = text.split(" ", -1)
-        var hits = Set.empty[String]
-        if (toks.length >= k) {
-          val bench = benchShingles.value
-          toks.sliding(k).foreach { w =>
-            val s = w.mkString(" ")
-            if (bench.contains(s)) hits += s
-          }
-        }
-        DecontOut(id, hits.size.toLong, if (hits.nonEmpty) 1 else 0)
+        val hits = graft.ops.Dedup.distinctShingles(text, k).asScala.count(benchShingles.value.contains)
+        DecontOut(id, hits.toLong, if (hits > 0) 1 else 0)
       }
   }
 
   final case class PolicyOut(doc_id: Long, lang: String, n_tokens: Int, reason: String, keep: Int)
 
-  /** Streaming twin of [[graft.ops.TextOps.filterPolicy]] — same rules,
-    * same precedence, same integer-arithmetic repetition threshold, but
-    * the contamination check is a row-local probe of the broadcast
-    * benchmark shingle set (see [[benchmarkShingles]]) instead of the
-    * batch join, so the whole policy is STATELESS: no watermark, no
-    * state store, no shuffle; output equals the batch op exactly
-    * (spec-gated).
+  /** Streaming twin of [[graft.ops.TextOps.filterPolicy]]: the batch
+    * op's own signal and reason functions (`TextOps.policySignals`,
+    * `TextOps.policyReason`), with the contamination check a row-local
+    * probe of the broadcast benchmark shingle set (see
+    * [[benchmarkShingles]]) instead of the batch join — run only for
+    * docs that pass every other rule. The whole policy is STATELESS:
+    * no watermark, no state store, no shuffle; output equals the batch
+    * op exactly (spec-gated). The independent arm is the q42 DuckDB
+    * oracle, which pins the batch op.
     */
   def filterPolicyStream(
       spark: SparkSession,
@@ -529,28 +539,11 @@ object StreamOps {
     docs.select(col("doc_id").cast("long"), col("lang"), col("text"))
       .as[(Long, String, String)]
       .map { case (id, lang, text) =>
-        val toks = text.split(" ", -1)
-        val n = toks.length
-        val mx =
-          if (n < 2) 0L
-          else {
-            val counts = scala.collection.mutable.HashMap.empty[String, Long]
-            toks.sliding(2).foreach { w =>
-              val g = w.mkString(" "); counts.update(g, counts.getOrElse(g, 0L) + 1L)
-            }
-            counts.valuesIterator.max
-          }
-        lazy val contaminated = n >= k && {
-          val bench = benchShingles.value
-          toks.sliding(k).exists(w => bench.contains(w.mkString(" ")))
-        }
-        val reason =
-          if (!allowedLangs.contains(lang)) "lang"
-          else if (n < minTokens) "too_short"
-          else if (n > maxTokens) "too_long"
-          else if (mx * repDen > (n - 1).toLong * repNum) "repetitive"
-          else if (contaminated) "contaminated"
-          else "kept"
+        val (n, mx) = graft.ops.TextOps.policySignals(text)
+        val reason = graft.ops.TextOps.policyReason(
+          lang, n, mx,
+          graft.ops.Dedup.distinctShingles(text, k).asScala.exists(benchShingles.value.contains),
+          allowedLangs, minTokens, maxTokens, repNum, repDen)
         PolicyOut(id, lang, n, reason, if (reason == "kept") 1 else 0)
       }
   }

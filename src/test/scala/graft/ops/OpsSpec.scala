@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.TestSpark
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,10 +15,11 @@ class OpsSpec extends AnyFunSuite {
     rows.toSeq.toDF("doc_id", "text")
   }
 
-  test("shingles: distinct word 3-grams in order") {
-    val d = docs((1L, "a b c d a b c d"))
-    val sh = d.select(Dedup.shingles(col("text")).as("s")).head().getSeq[String](0)
-    assert(sh == Seq("a b c", "b c d", "c d a", "d a b"))
+  test("shingles: distinct word 3-grams") {
+    import scala.jdk.CollectionConverters._
+    assert(Dedup.distinctShingles("a b c d a b c d", 3).asScala ==
+      Set("a b c", "b c d", "c d a", "d a b"))
+    assert(Dedup.distinctShingles("a b", 3).isEmpty && Dedup.distinctShingles(null, 3).isEmpty)
   }
 
   test("exact dedup groups identical texts") {
@@ -414,12 +416,14 @@ class OpsSpec extends AnyFunSuite {
     val train = docs(
       (1L, "zz one two three four five yy"), // shares the first
       (2L, "one two three four five six tail"), // shares both
-      (3L, "totally different words here indeed present"))
+      (3L, "totally different words here indeed present"),
+      (4L, null)) // null text has no shingles
     val r = TextOps.decontaminate(train, bench).collect()
       .map(x => x.getLong(0) -> ((x.getLong(1), x.getInt(2)))).toMap
     assert(r(1L) == ((1L, 1)))
     assert(r(2L) == ((2L, 1)))
     assert(r(3L) == ((0L, 0)))
+    assert(r(4L) == ((0L, 0)))
   }
 
   test("contaminationPairs: per-benchmark attribution; flagged set equals decontaminate's") {
@@ -938,19 +942,48 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("simhashExpr (row-local, shuffle-free) is bit-identical to the groupBy simhash") {
+  /** The simhash as an interpreted Column HOF: one md5 per token, votes
+    * accumulated in an array accumulator. Bit arithmetic is shift-free
+    * so it stays in the Column API — bit j of the token hash is tested
+    * with `h & (1L << j)` against a literal powers array, and the
+    * fingerprint is the sum of the powers whose vote is positive. The
+    * independent arm of the simhash bit-identity spec.
+    */
+  private def simhashHof(text: Column, bits: Int): Column = {
+    val powers = typedLit((0 until bits).map(j => 1L << j))
+    val hs = transform(
+      TextOps.tokens(text),
+      t => conv(substring(md5(to_binary(t, lit("utf-8"))), 1, (bits + 3) / 4), 16, 10).cast("long"))
+    val votes = aggregate(
+      hs,
+      array_repeat(lit(0), bits),
+      (acc, h) => zip_with(acc, powers, (a, p) =>
+        a + when(h.bitwiseAND(p) =!= 0, 1).otherwise(-1)))
+    aggregate(
+      zip_with(votes, powers, (v, p) => when(v > 0, p).otherwise(0L)),
+      lit(0L),
+      (acc, x) => acc + x)
+  }
+
+  test("simhash and simhashExpr equal the HOF reference bit for bit, with no shuffle") {
     import spark.implicits._
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     for (bits <- Seq(16, 60)) {
-      val agg = TextOps.simhash(d, bits).collect()
+      val ref = d.select($"doc_id", simhashHof($"text", bits))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val typed = TextOps.simhash(d, bits).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       val local = d.select($"doc_id", TextOps.simhashExpr($"text", bits).as("simhash"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(local == agg, s"bits=$bits fingerprints differ")
+      assert(typed == ref, s"bits=$bits simhash differs from the HOF reference")
+      assert(local == ref, s"bits=$bits simhashExpr differs from the HOF reference")
     }
-    // and the row-local plan has no shuffle
-    val plan = d.select(TextOps.simhashExpr($"text")).queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), "row-local simhash must not shuffle")
+    assert(spark.range(1).select(TextOps.simhashExpr(lit(null).cast("string"))).head().isNullAt(0),
+      "null text must give a null fingerprint")
+    // and the row-local plans have no shuffle
+    for (plan <- Seq(d.select(TextOps.simhashExpr($"text")), TextOps.simhash(d))
+           .map(_.queryExecution.executedPlan.toString))
+      assert(!plan.contains("Exchange"), "row-local simhash must not shuffle:\n" + plan)
   }
 
   test("tokenRarity: corpus-frequency profile, exact rational arithmetic") {
@@ -1077,16 +1110,22 @@ class OpsSpec extends AnyFunSuite {
       (4L, "en", distinct95), // too_long
       (5L, "en", mk(30, "dup")), // repetitive (mode bigram 29/29)
       (6L, "en", distinct20 + " the quick brown fox jumps over"), // contaminated (5-gram overlap)
-      (7L, "de", distinct20.replace("w", "v")) // kept
+      (7L, "de", distinct20.replace("w", "v")), // kept
+      (8L, "en", null), // null text: n_tokens -1, too_short
+      (9L, "zh", null), // null text, but lang fails first
+      (10L, null, distinct20.replace("w", "u")) // null lang passes the lang rule (q42 oracle)
     ).toDF("doc_id", "lang", "text")
     val bench = Seq((100L, "xx " + "the quick brown fox jumps over yonder hill")).toDF("doc_id", "text")
 
-    val out = TextOps.filterPolicy(docs, bench).collect()
-      .map(r => r.getLong(0) -> (r.getString(3), r.getInt(4))).toMap
+    val rows = TextOps.filterPolicy(docs, bench).collect()
+    val out = rows.map(r => r.getLong(0) -> (r.getString(3), r.getInt(4))).toMap
     assert(out == Map(
       1L -> ("lang", 0), 2L -> ("lang", 0), 3L -> ("too_short", 0),
       4L -> ("too_long", 0), 5L -> ("repetitive", 0),
-      6L -> ("contaminated", 0), 7L -> ("kept", 1)), out.toString)
+      6L -> ("contaminated", 0), 7L -> ("kept", 1),
+      8L -> ("too_short", 0), 9L -> ("lang", 0), 10L -> ("kept", 1)), out.toString)
+    val nTokens = rows.map(r => r.getLong(0) -> r.getInt(2)).toMap
+    assert(nTokens(8L) == -1 && nTokens(9L) == -1, nTokens.toString)
   }
 
   test("piiScrub: typed redaction, per-type counts, boundary-guarded patterns") {

@@ -497,7 +497,8 @@ class StreamOpsSpec extends AnyFunSuite {
       (1L, "my essay asks what is the capital of france twice: what is the capital of france"),
       (2L, "an entirely clean training document about cooking pasta"),
       (3L, "short doc"), // fewer than k tokens: must not crash, must emit 0
-      (4L, "students solve for x in the equation and also ask what is the capital of france"))
+      (4L, "students solve for x in the equation and also ask what is the capital of france"),
+      (5L, null)) // null text: no shingles, (0, 0)
       .toDF("doc_id", "text")
 
     val batch = graft.ops.TextOps.decontaminate(docs, bench, k = 5).collect()
@@ -511,15 +512,19 @@ class StreamOpsSpec extends AnyFunSuite {
       .outputMode("append").start()
     q.processAllAvailable()
     mem.addData((3L, "short doc"),
-      (4L, "students solve for x in the equation and also ask what is the capital of france"))
+      (4L, "students solve for x in the equation and also ask what is the capital of france"),
+      (5L, null))
     q.processAllAvailable()
+    val progress = q.lastProgress
     q.stop()
 
     val streamed = spark.table("decont_stream").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getInt(2))).toMap
     assert(streamed == batch, s"stream $streamed != batch $batch")
+    assert(progress.stateOperators.isEmpty, "decontaminateStream must keep no state store")
     // The fixture must exercise both outcomes and a multi-shingle hit.
     assert(batch(1L)._2 == 1 && batch(2L) == ((0L, 0)) && batch(3L) == ((0L, 0)))
+    assert(batch(5L) == ((0L, 0)))
     assert(batch(4L)._1 >= 2L, s"doc 4 overlaps both benchmark items: ${batch(4L)}")
     shingles.destroy()
   }
@@ -553,7 +558,9 @@ class StreamOpsSpec extends AnyFunSuite {
       (3L, "en", (1 to 95).map(i => s"w$i").mkString(" ")), // too_long
       (4L, "en", Seq.fill(30)("dup").mkString(" ")), // repetitive
       (5L, "en", distinct20 + " the quick brown fox jumps over"), // contaminated
-      (6L, "de", distinct20.replace("w", "v"))) // kept
+      (6L, "de", distinct20.replace("w", "v")), // kept
+      (7L, null, distinct20.replace("w", "u")), // null lang: passes the lang rule, kept
+      (8L, "en", null)) // null text: n_tokens -1, too_short
     val docs = rows.toDF("doc_id", "lang", "text")
     val bench = Seq((100L, "xx the quick brown fox jumps over yonder hill")).toDF("doc_id", "text")
 
@@ -567,13 +574,18 @@ class StreamOpsSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("policy_stream").outputMode("append").start()
     q.processAllAvailable()
     mem.addData(rows.drop(3))
-    q.processAllAvailable(); q.stop()
+    q.processAllAvailable()
+    val progress = q.lastProgress
+    q.stop()
 
     val streamed = spark.table("policy_stream").as[StreamOps.PolicyOut].collect()
       .map(p => p.doc_id -> (p.lang, p.n_tokens, p.reason, p.keep)).toMap
     assert(streamed == batch, s"stream $streamed != batch $batch")
+    assert(progress.stateOperators.isEmpty, "filterPolicyStream must keep no state store")
     assert(batch.values.map(_._3).toSet ==
       Set("lang", "too_short", "too_long", "repetitive", "contaminated", "kept"))
+    assert(batch(7L) == ((null, 20, "kept", 1)) && batch(8L) == (("en", -1, "too_short", 0)),
+      s"null lang / null text: ${batch(7L)} ${batch(8L)}")
     shingles.destroy()
   }
 
@@ -608,10 +620,12 @@ class StreamOpsSpec extends AnyFunSuite {
     shingles.destroy()
   }
 
-  test("filterPolicyStream == batch policy on 200 randomized docs (independent reimpl cross-check)") {
-    // the stream twin recomputes every signal in plain JVM Scala while
-    // the batch op uses Catalyst expressions — agreement on randomized
-    // input is a two-implementation property check of the whole policy
+  test("filterPolicyStream == batch policy on 200 randomized docs") {
+    // both sides share TextOps' signal and reason functions, so this
+    // checks the stream's broadcast-probe contamination against the
+    // batch join on dense random overlap; the independent arm for the
+    // rules themselves is the q42 DuckDB oracle (and q38's for the
+    // shingle overlap)
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val rnd = new scala.util.Random(4242L)
